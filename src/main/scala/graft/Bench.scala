@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -87,11 +88,18 @@ object Bench {
 
     // a failing query must NOT median as a fast clean pass: record success
     // and failure separately; medians are computed over successful runs
-    // only, and queries with any failing run are listed in "failed"
-    def timeOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+    // only, and queries with any failing run are listed in "failed".
+    // A failure returns its cause (`class: first message line`), which is
+    // printed to stderr here. NonFatal only: an OOM must kill the bench.
+    def timeOnce(n: String): (Double, Option[String]) = {
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val cause =
+        try { SparkEntry.queries(n)(spark, sfDir).count(); None }
+        catch { case NonFatal(e) =>
+          Some(e.getClass.getName + ": " +
+            Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")) }
       val dt = (System.nanoTime() - t0) / 1e9
+      cause.foreach(c => System.err.println(s"[bench] $n failed: $c"))
       spark.catalog.clearCache() // outside the timer; isolates queries
       // drop the run's own localCheckpoint blocks NOW (outside the timer),
       // not at the next GC: clearCache cannot see them, and 232 queries ×
@@ -103,7 +111,7 @@ object Bench {
       spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
         if (!prebuiltIds.contains(id)) rdd.unpersist(blocking = true)
       }
-      (dt, ok)
+      (dt, cause)
     }
     // interleave rounds (run 1 of every query, then run 2, ...) rather than
     // back-to-back repeats: back-to-back shares JIT/page-cache state warmed
@@ -123,11 +131,13 @@ object Bench {
     val names = SparkEntry.queries.keys.toSeq
     val samples = collection.mutable.Map(names.map(_ -> List.empty[Double]): _*)
     val failures = collection.mutable.Map(names.map(_ -> 0): _*)
+    val lastCause = collection.mutable.Map.empty[String, String]
     ((if (prime) 0 else 1) to runs).foreach { round =>
       names.foreach { n =>
-        val (dt, ok) = timeOnce(SparkEntry.queries(n))
-        if (round > 0) {
-          if (ok) samples(n) = dt :: samples(n) else failures(n) += 1
+        val (dt, cause) = timeOnce(n)
+        if (round > 0) cause match {
+          case None => samples(n) = dt :: samples(n)
+          case Some(c) => failures(n) += 1; lastCause(n) = c
         }
       }
       // storage must stay FLAT across rounds (prebuilt frames only): a
@@ -169,9 +179,16 @@ object Bench {
     def jmap(m: Map[String, Double], ns: Seq[String]): String =
       ns.map(n => s"\"" + n + "\":" + f"${m(n)}%.4f").mkString("{", ",", "}")
     def jarr(ns: Seq[String]): String = ns.map("\"" + _ + "\"").mkString("[", ",", "]")
+    def jstr(v: String): String = v.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    }.mkString("\"", "", "\"")
+    val failedCauses = failed.map(n => jstr(n) + ":" + jstr(lastCause(n))).mkString("{", ",", "}")
     val total = med.values.sum
     // full per-query detail first (humans / BENCH_NOTES), ...
-    val detailLine = s"""{"metric":"total_detail","value":$total,"unit":"sec","runs":$runs,"primed":$prime,"silver_prebuilt":$silverPrebuilt,"ann_index_prebuilt":$annPrebuilt,"failed":${jarr(failed)},"queries":${jmap(med, ok)},"queries_min":${jmap(minT, ok)},"spread":${jmap(spread, ok)},"sf":"$sfDir"}"""
+    val detailLine = s"""{"metric":"total_detail","value":$total,"unit":"sec","runs":$runs,"primed":$prime,"silver_prebuilt":$silverPrebuilt,"ann_index_prebuilt":$annPrebuilt,"failed":${jarr(failed)},"failed_causes":$failedCauses,"queries":${jmap(med, ok)},"queries_min":${jmap(minT, ok)},"spread":${jmap(spread, ok)},"sf":"$sfDir"}"""
     println(detailLine)
     // ... persisted too: the driver's stdout tail truncates this line every
     // round (BENCH_r*.json parsed=null), and auditors then misread the
