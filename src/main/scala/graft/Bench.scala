@@ -37,10 +37,16 @@ object Bench {
     // plan shapes hit Spark's codegen cache and warm the JIT, so the timed
     // sf runs below measure steady-state data processing, not compiler
     // startup. Disable with SPARK_GRAFT_WARMUP=none.
+    // A warm-up failure is printed and listed in "warmup_failed" (NonFatal
+    // only, as for the timed runs).
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "/root/testdata/sf0.001")
+    val warmupFailed = collection.mutable.Map.empty[String, String]
     if (warmDir != "none" && new java.io.File(warmDir).isDirectory) {
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
+      SparkEntry.queries.foreach { case (n, fn) =>
+        try fn(spark, warmDir).count()
+        catch { case NonFatal(e) =>
+          warmupFailed(n) = describe(e)
+          System.err.println(s"[bench] warmup $n failed: ${warmupFailed(n)}") }
       }
     }
     // drop every cache the warmup persisted — 90+ retained per-query
@@ -95,9 +101,7 @@ object Bench {
       val t0 = System.nanoTime()
       val cause =
         try { SparkEntry.queries(n)(spark, sfDir).count(); None }
-        catch { case NonFatal(e) =>
-          Some(e.getClass.getName + ": " +
-            Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")) }
+        catch { case NonFatal(e) => Some(describe(e)) }
       val dt = (System.nanoTime() - t0) / 1e9
       cause.foreach(c => System.err.println(s"[bench] $n failed: $c"))
       spark.catalog.clearCache() // outside the timer; isolates queries
@@ -185,10 +189,11 @@ object Bench {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     }.mkString("\"", "", "\"")
-    val failedCauses = failed.map(n => jstr(n) + ":" + jstr(lastCause(n))).mkString("{", ",", "}")
+    def jcauses(m: collection.Map[String, String]): String =
+      m.keys.toSeq.sorted.map(n => jstr(n) + ":" + jstr(m(n))).mkString("{", ",", "}")
     val total = med.values.sum
     // full per-query detail first (humans / BENCH_NOTES), ...
-    val detailLine = s"""{"metric":"total_detail","value":$total,"unit":"sec","runs":$runs,"primed":$prime,"silver_prebuilt":$silverPrebuilt,"ann_index_prebuilt":$annPrebuilt,"failed":${jarr(failed)},"failed_causes":$failedCauses,"queries":${jmap(med, ok)},"queries_min":${jmap(minT, ok)},"spread":${jmap(spread, ok)},"sf":"$sfDir"}"""
+    val detailLine = s"""{"metric":"total_detail","value":$total,"unit":"sec","runs":$runs,"primed":$prime,"silver_prebuilt":$silverPrebuilt,"ann_index_prebuilt":$annPrebuilt,"failed":${jarr(failed)},"failed_causes":${jcauses(lastCause)},"warmup_failed":${jcauses(warmupFailed)},"queries":${jmap(med, ok)},"queries_min":${jmap(minT, ok)},"spread":${jmap(spread, ok)},"sf":"$sfDir"}"""
     println(detailLine)
     // ... persisted too: the driver's stdout tail truncates this line every
     // round (BENCH_r*.json parsed=null), and auditors then misread the
@@ -218,4 +223,9 @@ object Bench {
     println(s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"nq":${names.size},"primed":$prime,"silver_prebuilt":$silverPrebuilt,"ann_index_prebuilt":$annPrebuilt,"failed":${jarr(failed)},"queries":${jmap(med, headline)},"note":"headline subset; full map on total_detail line","sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** A failure as `class: first message line`, for stderr and the detail line. */
+  def describe(e: Throwable): String =
+    e.getClass.getName + ": " +
+      Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
 }

@@ -28,11 +28,11 @@ object Bronze {
     spark.read.schema(schema).option("multiLine", "true")
       .option("mode", "PERMISSIVE").json(path)
       .withColumn("s3_key", input_file_name())
+      // bad/missing segment → null (not a failed load), NOT an all-null
+      // regex like the reference once shipped (.context/DECISIONS.md:611-642)
       .withColumn("partition_date",
-        to_date(regexp_extract(col("s3_key"), "date=([0-9]{4}-[0-9]{2}-[0-9]{2})", 1)))
+        try_to_date(regexp_extract(col("s3_key"), "date=([0-9]{4}-[0-9]{2}-[0-9]{2})", 1)))
       .withColumn("game_id",
-        // bad/missing segment → null, NOT an all-null regex like the
-        // reference once shipped (.context/DECISIONS.md:611-642)
         nullif(regexp_extract(col("s3_key"), "game_id=([0-9]+)", 1), lit("")).cast("long"))
       .select(struct(schema.fieldNames.map(col): _*).as("payload"),
         col("s3_key"), col("partition_date"), col("game_id"))

@@ -56,8 +56,16 @@ object Models {
   }
 
   /** `stg_player_game_stats.sql:20-78` / the Jinja combo loop of
-    * `fact_player_game_stats.sql:29-93` (F1/F2): four side×position
-    * flattens unioned byName. The Scala Seq+map+reduce IS the Jinja loop.
+    * `fact_player_game_stats.sql:29-93` (F1/F2): the four side×position
+    * flattens in ONE pass. Each group array is tagged with its side and
+    * position type (`transform`), the four tagged arrays are concatenated,
+    * and a single `explode` emits the player rows, so the latest-snapshot
+    * window runs once (a union of four explodes planned it four times).
+    * The Scala Seq+map IS the Jinja loop.
+    *
+    * A null or missing group array contributes zero rows: each array is
+    * coalesced to empty BEFORE the `concat`, which returns null (and would
+    * drop the whole game) if any argument is null.
     */
   def stgPlayerGameStats(boxscoreBronze: DataFrame): DataFrame = {
     val latest = Bronze.latestSnapshot(
@@ -67,40 +75,46 @@ object Models {
       ("homeTeam", "home", "defense", "D"),
       ("awayTeam", "away", "forwards", "F"),
       ("awayTeam", "away", "defense", "D"))
-    combos.map { case (sideField, side, group, posType) =>
-      latest.select(
-        col("payload.id").as("game_id"),
-        to_date(col("payload.gameDate")).as("game_date"),
-        col("payload.season").as("season"),
-        col("payload.gameType").as("game_type"),
-        col("payload.gameState").as("game_state"),
-        lit(side).as("home_away"),
-        col(s"payload.$sideField.id").as("team_id"),
-        col(s"payload.$sideField.abbrev").as("team_abbrev"),
-        lit(posType).as("position_type"),
-        explode(col(s"payload.playerByGameStats.$sideField.$group")).as("p"))
-        .filter(col("p.playerId").isNotNull) // P5
-        .select(col("game_id"), col("game_date"), col("season"), col("game_type"),
-          col("game_state"), col("home_away"), col("team_id"), col("team_abbrev"),
-          col("position_type"),
-          col("p.playerId").as("player_id"),
-          col("p.name.default").as("player_name"),
-          col("p.position").as("position"),
-          col("p.goals").as("goals"),
-          col("p.assists").as("assists"),
-          col("p.points").as("points"),
-          col("p.plusMinus").as("plus_minus"),
-          col("p.sog").as("sog"),
-          col("p.pim").as("pim"),
-          col("p.hits").as("hits"),
-          col("p.blockedShots").as("blocked_shots"),
-          col("p.giveaways").as("giveaways"),
-          col("p.takeaways").as("takeaways"),
-          col("p.powerPlayGoals").as("power_play_goals"),
-          col("p.shorthandedGoals").as("shorthanded_goals"),
-          col("p.faceoffWinningPctg").as("faceoff_winning_pctg"),
-          col("p.toi").as("toi"))
-    }.reduce(_ unionByName _)
+    val tagged = combos.map { case (sideField, side, group, posType) =>
+      transform(coalesce(col(s"payload.playerByGameStats.$sideField.$group"), array()),
+        p => struct(
+          lit(side).as("home_away"),
+          col(s"payload.$sideField.id").as("team_id"),
+          col(s"payload.$sideField.abbrev").as("team_abbrev"),
+          lit(posType).as("position_type"),
+          p.as("p")))
+    }
+    latest.select(
+      col("payload.id").as("game_id"),
+      to_date(col("payload.gameDate")).as("game_date"),
+      col("payload.season").as("season"),
+      col("payload.gameType").as("game_type"),
+      col("payload.gameState").as("game_state"),
+      explode(concat(tagged: _*)).as("r"))
+      .filter(col("r.p.playerId").isNotNull) // P5
+      .select(col("game_id"), col("game_date"), col("season"), col("game_type"),
+        col("game_state"),
+        col("r.home_away").as("home_away"),
+        col("r.team_id").as("team_id"),
+        col("r.team_abbrev").as("team_abbrev"),
+        col("r.position_type").as("position_type"),
+        col("r.p.playerId").as("player_id"),
+        col("r.p.name.default").as("player_name"),
+        col("r.p.position").as("position"),
+        col("r.p.goals").as("goals"),
+        col("r.p.assists").as("assists"),
+        col("r.p.points").as("points"),
+        col("r.p.plusMinus").as("plus_minus"),
+        col("r.p.sog").as("sog"),
+        col("r.p.pim").as("pim"),
+        col("r.p.hits").as("hits"),
+        col("r.p.blockedShots").as("blocked_shots"),
+        col("r.p.giveaways").as("giveaways"),
+        col("r.p.takeaways").as("takeaways"),
+        col("r.p.powerPlayGoals").as("power_play_goals"),
+        col("r.p.shorthandedGoals").as("shorthanded_goals"),
+        col("r.p.faceoffWinningPctg").as("faceoff_winning_pctg"),
+        col("r.p.toi").as("toi"))
   }
 
   // ------------------------------------------------------------- dimensions
@@ -148,13 +162,18 @@ object Models {
   /** `dim_date.sql`: generated spine (row generator → dates), NHL season /
     * phase / flags. `runDate` injected instead of CURRENT_DATE so outputs
     * are reproducible (SURVEY §7.4.5); spine spans 2020-01-01 → runDate+3y
-    * (`dim_date.sql:26,114`).
+    * (`dim_date.sql:26,114`). The spine runs to the later of its two ends
+    * and is then filtered to `date_day <= runDate+3y`, as the reference's
+    * row-generator spine is: a run date before 2017 yields an empty table
+    * (a descending `sequence` with a positive step would throw).
     */
   def dimDate(spark: org.apache.spark.sql.SparkSession, runDate: String): DataFrame = {
     val d = col("date_day")
+    val start = to_date(lit("2020-01-01"))
+    val end = add_months(to_date(lit(runDate)), 36)
     spark.range(1).select(explode(sequence(
-      to_date(lit("2020-01-01")), add_months(to_date(lit(runDate)), 36),
-      expr("interval 1 day"))).as("date_day"))
+      start, greatest(start, end), expr("interval 1 day"))).as("date_day"))
+      .filter(d <= end)
       .select(d,
         year(d).as("year"),
         month(d).as("month"),

@@ -7,11 +7,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * bronze reads → staging → dims → facts → metrics → props → report, in
   * dependency order.
   *
-  * Materialization mirrors dbt's view/table split (`dbt_project.yml:18-31`):
-  * staging models stay lazy (views); fact tables that fan out to several
-  * consumers are `persist()`ed (tables) so the latest-snapshot shuffle and
-  * explodes run once, not once per consumer. On a cluster the persist
-  * points become written silver parquet.
+  * Materialization mirrors the reference's COPY INTO → dbt split
+  * (`dbt_project.yml:18-31`). With `persist` on (the default):
+  *   - bronze is a loaded table: each bronze input is `persist()`ed once,
+  *     the analog of the COPY INTO load, so its derivation (a multiLine
+  *     JSON parse in [[RunPipeline]], a nesting aggregate in
+  *     [[Synthetic]]) runs once however many models read it;
+  *   - staging models are views over the loaded bronze, except
+  *     `stgPlayerGameStats`, which feeds four consumers and is persisted
+  *     so its latest-snapshot shuffle and explode run once;
+  *   - fact tables that fan out to several consumers
+  *     (`factPlayerGameStats`, `factShotEvents`) are persisted; dims,
+  *     metrics and the report stay views.
+  * Every persist is lazy: the first action that reads a frame fills it.
+  * The props models cut lineage themselves with `localCheckpoint` (the
+  * crosswalk's two name tables, eagerly, during `run`; v2's shared
+  * pivot, lazily); those are not governed by `persist`.
+  * `persist = false` leaves the whole graph as views (same rows, every
+  * consumer re-derives its inputs). On a cluster the persist points
+  * become written bronze and silver parquet.
   */
 final case class NhlOutputs(
     stgGames: DataFrame,
@@ -47,9 +61,14 @@ object NhlPipeline {
 
     def tbl(df: DataFrame): DataFrame = if (persist) df.persist() else df
 
+    // bronze (loaded once)
+    val boxscore = tbl(boxscoreBronze)
+    val pbp = tbl(pbpBronze)
+    val odds = tbl(oddsBronze)
+
     // staging (views)
-    val stgGames = Models.stgGames(boxscoreBronze)
-    val stgPgs = tbl(Models.stgPlayerGameStats(boxscoreBronze)) // feeds 4 consumers
+    val stgGames = Models.stgGames(boxscore)
+    val stgPgs = tbl(Models.stgPlayerGameStats(boxscore)) // feeds 4 consumers
 
     // dims
     val dimTeam = Models.dimTeam(stgGames)
@@ -60,7 +79,7 @@ object NhlPipeline {
     val factGameResults = Models.factGameResults(stgGames)
     val factPgs = tbl(Models.factPlayerGameStats(stgPgs, dimPlayer))
     val factTgs = Models.factTeamGameStats(stgGames, stgPgs)
-    val factShots = tbl(Models.factShotEvents(pbpBronze))
+    val factShots = tbl(Models.factShotEvents(pbp))
 
     // window metrics (views over facts)
     val teamShotMetrics = Metrics.teamShotMetrics(factTgs)
@@ -70,7 +89,7 @@ object NhlPipeline {
     val playerLoc = Metrics.playerShotLocations(factShots)
 
     // props pipeline
-    val stgOdds = Props.stgOddsPlayerProps(oddsBronze)
+    val stgOdds = Props.stgOddsPlayerProps(odds)
     val crosswalk = Props.stgPlayerNameCrosswalk(
       stgOdds.select("odds_player_name"), factPgs.select("player_id", "player_name"))
     val v1 = Props.factPlayerSogPropsV1(stgOdds, factPgs)

@@ -36,7 +36,8 @@ object QueryTime {
     if (new java.io.File(warmDir).isDirectory)
       names.foreach { n =>
         try SparkEntry.queries(n)(spark, warmDir).count()
-        catch { case _: Throwable => () }
+        catch { case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[qt] warmup $n failed: ${graft.Bench.describe(e)}") }
       }
     spark.catalog.clearCache()
     // mirror Bench r15: drop the warmup's checkpoint blocks, run the

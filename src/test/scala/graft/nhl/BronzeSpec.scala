@@ -44,6 +44,19 @@ class BronzeSpec extends SparkTestBase {
       .getAs[Int]("home_team_score") === 4) // latest snapshot won
   }
 
+  test("readRawSnapshots: a malformed date or game_id segment loads as null, not a failed read") {
+    val root = Files.createTempDirectory("graft_bronze_bad").toString
+    val p = Paths.get(root, "raw/nhl/game_boxscore/date=2024-10-00/hour=03/game_id=/snap.json")
+    Files.createDirectories(p.getParent)
+    Files.writeString(p, NhlFixtures.g2Final)
+    val row = Bronze.readRawSnapshots(spark,
+      s"$root/raw/nhl/game_boxscore/*/*/*/*.json", Schemas.boxscore).collect()
+    assert(row.length === 1)
+    assert(row(0).isNullAt(row(0).fieldIndex("partition_date")))
+    assert(row(0).isNullAt(row(0).fieldIndex("game_id")))
+    assert(row(0).getAs[org.apache.spark.sql.Row]("payload").getAs[Long]("id") === 2024020002L)
+  }
+
   test("partitioned sink + dynamic partition overwrite is idempotent (S5/S6)") {
     val root = Files.createTempDirectory("graft_sink").toString
     val df = Seq((1L, "2024-10-09", "a"), (2L, "2024-10-10", "b"))

@@ -90,6 +90,13 @@ class NhlModelsSpec extends SparkTestBase {
     assert(aug.getAs[String]("season_phase") === "Off Season")
   }
 
+  test("dimDate: a run date whose end precedes the 2020 spine start yields no rows") {
+    // Synthetic.RunDate: runDate+3y = 2004-09-01 < 2020-01-01
+    val d = Models.dimDate(spark, "2001-09-01")
+    assert(d.count() === 0)
+    assert(d.columns.toSeq === out.dimDate.columns.toSeq)
+  }
+
   test("factTeamGameStats: union sides + multi-key join + player aggregates + pct") {
     val bosG1 = out.factTeamGameStats
       .filter($"game_id" === 2024020001L && $"team_abbrev" === "BOS").collect()(0)
